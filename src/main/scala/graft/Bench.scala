@@ -77,11 +77,11 @@ object Bench {
     // final orderBy under the count aggregate, under-measuring exactly
     // the sort cost the correctness path pays.
     //
-    // MEDIAN OF 3 runs per query: single-shot numbers swung ±1 s between
-    // rounds on sub-second queries (JIT tiers, stray compaction), making
-    // per-query regression deltas unreadable. A failing query records -1,
-    // never a plausible elapsed time (round-2 advice: a crash looked like
-    // a fast run).
+    // MIN OF 3 runs per query (see the min below): single-shot numbers
+    // swung ±1 s between rounds on sub-second queries (JIT tiers, stray
+    // compaction), making per-query regression deltas unreadable. A
+    // failing query records -1, never a plausible elapsed time (round-2
+    // advice: a crash looked like a fast run).
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     // One timed run of one query (noop sink, untimed cache hygiene after).
     def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {

@@ -1,8 +1,10 @@
 package graft
 
 import java.net.URI
+import java.nio.file.Files
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{DelegateToFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{
+  DelegateToFileSystem, FileStatus, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** `file://` filesystem for LOCAL runs that skips per-file permission
@@ -25,6 +27,30 @@ import org.apache.hadoop.fs.permission.FsPermission
   * integrity checking; `.crc` siblings are an artifact of pre-checksummed
   * remote filesystems.
   *
+  * The second fork: `getFileLinkStatus`. Without libhadoop, Hadoop
+  * (3.4.2) answers it on its deprecated path, which asks
+  * `FileUtil.readLink` for the link target — a FORKED `readlink` process
+  * (`Shell.execCommand`) for every path, link or not. One
+  * `FileContext.rename` looks up four link statuses (source and
+  * destination in `AbstractFileSystem.renameInternal`, again in the
+  * `FileSystem.rename` it delegates to), and Spark's checkpoint manager
+  * commits every offset-log, commit-log, source-log, sink-log,
+  * state-store delta and checksum file by rename: a JFR recording of
+  * the perfbench `ingest_land` workload counted 3752 `readlink` forks
+  * from 938 renames in 55 s, about 35 per micro-batch.
+  *
+  * Symlink policy: a path that `java.nio.file.Files.isSymbolicLink`
+  * says is not a link gets `getFileStatus(f)` — exactly what the
+  * deprecated path returns for a non-link, `FileNotFoundException` for a
+  * missing path included. A real symlink (dangling or not) keeps
+  * Hadoop's own code path, fork and all, so its answer stays Hadoop's.
+  * (That path runs `readlink` on `Path.toString`, so for a `file:` path,
+  * the form Spark passes, the fork fails and Hadoop too returns
+  * `getFileStatus`.) Measured per micro-batch on `ingest_land` (4 cores,
+  * traced, medians of 6 runs a side): `stream.wal_commit_ms` 15.2 → 1.4,
+  * `stream.commit_offsets_ms` 15.2 → 1.6, `stream.latest_offset_ms`
+  * 14.9 → 2.0, `stream.add_batch_ms` 290 → 237.
+  *
   * Scale posture: this class only ever serves `file://` paths. At
   * production scale the data lives on HDFS/S3 where this code path does
   * not exist (permissions are metadata operations there, and parquet
@@ -40,12 +66,18 @@ class GraftLocalFileSystem extends RawLocalFileSystem {
   // Checksum wrapper declares the scheme); callers probe it for lease
   // naming, so declare what this class serves.
   override def getScheme: String = "file"
+
+  override def getFileLinkStatus(f: Path): FileStatus =
+    if (Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
+    else getFileStatus(f)
 }
 
 /** The `AbstractFileSystem` (FileContext) face of
   * [[GraftLocalFileSystem]] — structured streaming's checkpoint manager
   * prefers FileContext, whose default `file` binding wraps a plain
-  * `RawLocalFileSystem` and pays the same fork-per-create. Wired via
+  * `RawLocalFileSystem` and pays the same fork-per-create, plus the four
+  * `readlink` forks of every `FileContext.rename` (its
+  * `getFileLinkStatus` delegates here). Wired via
   * `spark.hadoop.fs.AbstractFileSystem.file.impl`. */
 class GraftLocalFs(uri: URI, conf: Configuration)
   extends DelegateToFileSystem(

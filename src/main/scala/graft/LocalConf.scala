@@ -13,6 +13,12 @@ import org.apache.spark.sql.SparkSession
   *    [[GraftLocalFileSystem]]: without libhadoop, stock local-FS file
   *    creates FORK a `chmod` per file/dir (measured 50-150 ms each —
   *    the single hottest executor frame in profiled ingest queries).
+  *    The second fork is `readlink`, through `getFileLinkStatus`: four
+  *    per `FileContext.rename`, i.e. per checkpoint file commit (about
+  *    35 per micro-batch of a streaming ingest). Non-links are answered
+  *    with `getFileStatus`; real symlinks keep Hadoop's path. Per batch
+  *    this cut WAL commit 15.2 → 1.4 ms, offset commit 15.2 → 1.6 ms
+  *    and latest-offset 14.9 → 2.0 ms (see [[GraftLocalFileSystem]]).
   *    Only ever serves `file://` paths; remote stores are untouched.
   *  - `canChangeCachedPlanOutputPartitioning=true`: lets AQE coalesce
   *    the partitions of PERSISTED plans (operator-internal caches:

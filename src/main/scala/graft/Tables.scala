@@ -40,16 +40,20 @@ object Tables {
     * (`spark.sql`/`spark.table`) resolve by bare name — mirroring the
     * reference's Databricks-table source (`Optimus/megatron.py:63-65`)
     * and matching the DuckDB oracle's view names. */
-  @volatile private var registeredDir: String = null
+  private val registeredDir =
+    new java.util.WeakHashMap[SparkSession, String]()
   def registerViews(spark: SparkSession, sfDir: String): Unit = synchronized {
-    // idempotent per dir: re-reading 10 parquet footers before every query
-    // is pure overhead (the query harness calls this unconditionally)
-    if (registeredDir != sfDir) {
+    // idempotent per (session, dir): re-reading 10 parquet footers before
+    // every query is pure overhead (the query harness calls this
+    // unconditionally). Temp views belong to one session, so another
+    // session (`newSession()`) registers its own; the weak keys let a
+    // stopped session's entry go with it.
+    if (registeredDir.get(spark) != sfDir) {
       names.foreach(t => load(spark, sfDir, t).createOrReplaceTempView(t))
       // graft's text/vector functions ride along so config expr strings
       // and SQL sources can call them (lang_id, vector_cosine, ...)
       graft.functions.Registry.registerAll(spark)
-      registeredDir = sfDir
+      registeredDir.put(spark, sfDir)
     }
   }
 

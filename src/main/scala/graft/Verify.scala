@@ -20,15 +20,21 @@ object Verify {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
     val selected = SparkEntry.queries.filter { case (name, _) =>
       only.forall(_.exists(name.startsWith)) }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    val failed = selected.flatMap { case (name, fn) =>
+      val ok =
+        try { fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name"); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}"); false }
       // release any cache:true def stages the query's compile persisted
       graft.compile.Compiler.releaseAllCaches()
+      if (ok) None else Some(name)
     }
+    // A failed query is logged above and the loop goes on; this summary
+    // keeps the failures from scrolling away. The exit code stays 0.
+    if (failed.nonEmpty)
+      System.err.println(s"[verify] ${failed.size} of ${selected.size} " +
+        s"queries failed: ${failed.mkString(", ")}")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

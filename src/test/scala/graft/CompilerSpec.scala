@@ -1035,4 +1035,11 @@ class CompilerSpec extends SparkSpec {
       .agg(expr("hll_sketch_estimate(hll_union_agg(h))").as("nd")).head.getLong(0)
     assert(nd == 5L, s"HLL union estimate must be exact at this cardinality, got $nd")
   }
+
+  test("registerViews registers the views of every session, not once per dir") {
+    Tables.registerViews(spark, sf)
+    val other = spark.newSession()
+    Tables.registerViews(other, sf)
+    assert(other.table("orders").count() == spark.table("orders").count())
+  }
 }
